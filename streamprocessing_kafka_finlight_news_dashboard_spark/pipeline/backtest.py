@@ -1,12 +1,20 @@
-"""Portfolio backtest: sequential simulation + relational metrics.
+"""Portfolio backtest: sequential simulation + driver-side metrics report.
 
 The simulation itself (reference scripts/07_backtest.py:37-264) is a
 single global portfolio whose every decision depends on prior state
 (cash, open positions, MAX_POSITIONS cap) — inherently serial, so it
 lives in ONE ``applyInPandas`` over the date-ordered signal×price
-panel (SURVEY T8/F5: "a UDF by nature, not a plan node"). Everything
-around it — the ~30-metric report, drawdown window analysis, streak
-detection — is relational Spark (A9, A14, W1-W5), not Python.
+panel (SURVEY T8/F5: "a UDF by nature, not a plan node").
+
+The ~34-metric report runs on the driver in one numpy pass. Its inputs
+are bounded: the equity curve has one row per trading day (bounded by
+the calendar) and the trade log a few closes per day (bounded by
+``MAX_POSITIONS``). Over a few hundred rows, the fixed cost of each
+Spark job dominates; a relational plan pays it once per branch
+(aggregates, streaks, drawdown, its start date, risk: 13 jobs per
+report), while collecting the two inputs costs 2. Per-entity metrics
+that grow with the number of entities stay relational
+(plans/domain.py::backtest_summary_metrics).
 
 Semantics faithfully reproduced from the reference (studied, not
 copied): slippage ±0.05% on fills, 0.1% fees both sides
@@ -21,10 +29,23 @@ ddof=0 — SURVEY §7.3 flags the ddof trap).
 
 from __future__ import annotations
 
+import itertools
+import math
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 INITIAL_CAPITAL = 100_000.0
 POSITION_SIZE = 0.8
@@ -37,6 +58,76 @@ _SIM_SCHEMA = (
     "ticker string, entry_date timestamp, exit_date timestamp, entry_price double, "
     "exit_price double, shares double, pnl double, pnl_pct double, exit_reason string, "
     "sentiment double, news_count long, lookback_hours int, lead_days int, days_held int"
+)
+# pandas dtypes of the simulation's output, column for column with
+# _SIM_SCHEMA: a run without trades still hands Arrow typed (all-null)
+# trade columns instead of float NaN.
+_SIM_DTYPES = {
+    "row_type": "object",
+    "date": "datetime64[ns]",
+    "equity": "float64",
+    "cash": "float64",
+    "num_positions": "Int32",
+    "ticker": "object",
+    "entry_date": "datetime64[ns]",
+    "exit_date": "datetime64[ns]",
+    "entry_price": "float64",
+    "exit_price": "float64",
+    "shares": "float64",
+    "pnl": "float64",
+    "pnl_pct": "float64",
+    "exit_reason": "object",
+    "sentiment": "float64",
+    "news_count": "Int64",
+    "lookback_hours": "Int32",
+    "lead_days": "Int32",
+    "days_held": "Int32",
+}
+
+_T, _L, _I, _D = TimestampType(), LongType(), IntegerType(), DoubleType()
+#: The metrics report's columns: (name, type, nullable).
+_METRICS_SCHEMA = StructType(
+    [
+        StructField(name, dtype, nullable)
+        for name, dtype, nullable in (
+            ("start_date", _T, True),
+            ("end_date", _T, True),
+            ("trading_days", _L, False),
+            ("initial_capital", _D, False),
+            ("final_equity", _D, True),
+            ("total_return", _D, True),
+            ("total_return_pct", _D, True),
+            ("num_trades", _L, False),
+            ("num_wins", _L, True),
+            ("num_losses", _L, True),
+            ("win_rate", _D, True),
+            ("avg_win", _D, False),
+            ("avg_loss", _D, False),
+            ("avg_win_pct", _D, False),
+            ("avg_loss_pct", _D, False),
+            ("largest_win", _D, True),
+            ("largest_loss", _D, True),
+            ("largest_win_pct", _D, True),
+            ("largest_loss_pct", _D, True),
+            ("profit_factor", _D, True),
+            ("expectancy", _D, True),
+            ("avg_days_held", _D, True),
+            ("max_win_streak", _L, False),
+            ("max_loss_streak", _L, False),
+            ("max_drawdown", _D, True),
+            ("max_drawdown_pct", _D, True),
+            ("max_drawdown_start", _T, True),
+            ("max_drawdown_end", _T, True),
+            ("max_drawdown_duration_days", _I, True),
+            ("avg_daily_return", _D, True),
+            ("daily_volatility", _D, True),
+            ("annual_return", _D, True),
+            ("annual_volatility", _D, True),
+            ("sharpe_ratio", _D, True),
+            ("sortino_ratio", _D, True),
+            ("calmar_ratio", _D, True),
+        )
+    ]
 )
 
 
@@ -147,13 +238,7 @@ def _simulate(pdf: pd.DataFrame, hold_period_days: float, stop_loss: float, take
                 if tkr in day_close and not pd.isna(day_close[tkr]):
                     close_position(tkr, day_close[tkr], date, "end_of_backtest")
 
-    cols = [
-        "row_type", "date", "equity", "cash", "num_positions", "ticker",
-        "entry_date", "exit_date", "entry_price", "exit_price", "shares",
-        "pnl", "pnl_pct", "exit_reason", "sentiment", "news_count",
-        "lookback_hours", "lead_days", "days_held",
-    ]
-    return pd.DataFrame(out_equity + out_trades).reindex(columns=cols)
+    return pd.DataFrame(out_equity + out_trades, columns=list(_SIM_DTYPES)).astype(_SIM_DTYPES)
 
 
 def run_backtest(
@@ -223,130 +308,128 @@ def equity_analytics(equity: DataFrame) -> DataFrame:
 
 def backtest_metrics(trades: DataFrame, equity: DataFrame) -> DataFrame:
     """The reference's full metrics block (scripts/07_backtest.py:266-418)
-    as ONE relational plan: wide conditional aggregates over trades
-    (A9), gaps-and-islands streaks (A14/W5), window-based drawdown
-    analysis (W3/W4/W7), population-std Sharpe/Sortino/Calmar.
-    Returns a single-row DataFrame."""
-    eq = equity_analytics(equity).cache()
+    in one driver pass: the trade log and the equity curve are each
+    collected once and reduced with numpy. Returns a single-row
+    DataFrame with the fixed schema ``_METRICS_SCHEMA``.
 
-    # --- trade-level aggregates (one pass) ---
-    win = F.col("pnl") > 0
-    loss = F.col("pnl") < 0
-    t_agg = trades.agg(
-        F.count(F.lit(1)).alias("num_trades"),
-        F.sum(win.cast("long")).alias("num_wins"),
-        F.sum(loss.cast("long")).alias("num_losses"),
-        F.avg(F.when(win, F.col("pnl"))).alias("avg_win"),
-        F.avg(F.when(loss, F.col("pnl"))).alias("avg_loss"),
-        F.avg(F.when(win, F.col("pnl_pct"))).alias("avg_win_pct"),
-        F.avg(F.when(loss, F.col("pnl_pct"))).alias("avg_loss_pct"),
-        F.max("pnl").alias("largest_win"),
-        F.min("pnl").alias("largest_loss"),
-        F.max("pnl_pct").alias("largest_win_pct"),
-        F.min("pnl_pct").alias("largest_loss_pct"),
-        F.sum(F.when(win, F.col("pnl")).otherwise(0.0)).alias("gross_profit"),
-        F.sum(F.when(loss, F.col("pnl")).otherwise(0.0)).alias("gross_loss"),
-        F.avg("pnl").alias("expectancy"),
-        F.avg("days_held").alias("avg_days_held"),
+    Edge cases follow the reference's guards: with no trades the
+    counts, win rate, profit factor and streaks are 0, the ``avg_*``
+    metrics 0.0, and ``largest_*``/``expectancy``/``avg_days_held``
+    null; risk ratios whose denominator is zero or missing are 0.0."""
+    t = (
+        trades.select("exit_date", "ticker", "pnl", "pnl_pct", "days_held")
+        .toPandas()
+        .sort_values(["exit_date", "ticker"], kind="stable")
     )
+    e = equity.select("date", "equity").toPandas().sort_values("date", kind="stable")
+    row = {
+        "initial_capital": INITIAL_CAPITAL,
+        **_trade_metrics(t),
+        **_equity_metrics(e["date"].tolist(), e["equity"].to_numpy(float)),
+    }
+    table = pa.table({f.name: [row[f.name]] for f in _METRICS_SCHEMA.fields})
+    # An Arrow table becomes a LocalRelation: collecting the report
+    # launches no Spark job.
+    return trades.sparkSession.createDataFrame(table, _METRICS_SCHEMA)
 
-    # --- streaks: order trades by exit date, gaps-and-islands on win flag ---
-    wt = W.orderBy("exit_date", "ticker")
-    wrun = wt.rowsBetween(W.unboundedPreceding, W.currentRow)
-    streaked = (
-        trades.select("exit_date", "ticker", win.alias("win"))
-        .withColumn(
-            "new_streak",
-            F.when(~F.col("win").eqNullSafe(F.lag("win").over(wt)), 1).otherwise(0),
+
+def _mean(x: np.ndarray) -> float | None:
+    return float(x.mean()) if len(x) else None
+
+
+def _std_pop(x: np.ndarray) -> float | None:
+    """Population std (np.std ddof=0, as the reference), None when empty."""
+    return float(x.std()) if len(x) else None
+
+
+def _ratio_or_zero(num: float | None, den: float | None) -> float:
+    return num / den if den else 0.0
+
+
+def _trade_metrics(t: pd.DataFrame) -> dict:
+    """Win/loss counts and averages, extremes, profit factor and
+    streaks over the trade log sorted by (exit_date, ticker)."""
+    pnl = t["pnl"].to_numpy(float)
+    pct = t["pnl_pct"].to_numpy(float)
+    win, loss = pnl > 0, pnl < 0
+    n, wins = len(pnl), int(win.sum())
+    streaks = {True: 0, False: 0}
+    for is_win, run in itertools.groupby(win.tolist()):
+        streaks[is_win] = max(streaks[is_win], sum(1 for _ in run))
+    return {
+        "num_trades": n,
+        "num_wins": wins,
+        "num_losses": int(loss.sum()),
+        "win_rate": wins / max(n, 1) * 100,
+        "avg_win": _mean(pnl[win]) or 0.0,
+        "avg_loss": _mean(pnl[loss]) or 0.0,
+        "avg_win_pct": _mean(pct[win]) or 0.0,
+        "avg_loss_pct": _mean(pct[loss]) or 0.0,
+        "largest_win": float(pnl.max()) if n else None,
+        "largest_loss": float(pnl.min()) if n else None,
+        "largest_win_pct": float(pct.max()) if n else None,
+        "largest_loss_pct": float(pct.min()) if n else None,
+        "profit_factor": abs(_ratio_or_zero(float(pnl[win].sum()), float(pnl[loss].sum()))),
+        "expectancy": _mean(pnl),
+        "avg_days_held": _mean(t["days_held"].to_numpy(float)),
+        "max_win_streak": streaks[True],
+        "max_loss_streak": streaks[False],
+    }
+
+
+def _equity_metrics(dates: list, equity: np.ndarray) -> dict:
+    """Return and risk metrics over the date-sorted daily equity curve;
+    daily returns skip the first day, as the reference's
+    pct_change().dropna()."""
+    returns = equity[1:] / equity[:-1] - 1
+    avg, vol, down_std = _mean(returns), _std_pop(returns), _std_pop(returns[returns < 0])
+    annual_return = None if avg is None else (1 + avg) ** 252 - 1
+    annual_vol = None if vol is None else vol * math.sqrt(252)
+    downside_vol = None if down_std is None else down_std * math.sqrt(252)
+    final = float(equity[-1]) if dates else None
+    total_return = None if final is None else final / INITIAL_CAPITAL - 1
+    drawdown = _drawdown(dates, equity)
+    return {
+        "start_date": dates[0] if dates else None,
+        "end_date": dates[-1] if dates else None,
+        "trading_days": len(dates),
+        "final_equity": final,
+        "total_return": total_return,
+        "total_return_pct": None if total_return is None else total_return * 100,
+        **drawdown,
+        "avg_daily_return": avg,
+        "daily_volatility": vol,
+        "annual_return": annual_return,
+        "annual_volatility": annual_vol,
+        "sharpe_ratio": _ratio_or_zero(annual_return, annual_vol),
+        "sortino_ratio": _ratio_or_zero(annual_return, downside_vol),
+        "calmar_ratio": _ratio_or_zero(annual_return, abs(drawdown["max_drawdown"] or 0.0)),
+    }
+
+
+def _drawdown(dates: list, equity: np.ndarray) -> dict:
+    """The deepest drawdown: its trough is the first day at the deepest
+    point, and it starts on the first day equity reached the peak that
+    preceded the trough."""
+    if not dates:
+        return dict.fromkeys(
+            (
+                "max_drawdown",
+                "max_drawdown_pct",
+                "max_drawdown_start",
+                "max_drawdown_end",
+                "max_drawdown_duration_days",
+            )
         )
-        .withColumn("streak_id", F.sum("new_streak").over(wrun))
-        .groupBy("win", "streak_id")
-        .agg(F.count(F.lit(1)).alias("len"))
-        .groupBy()
-        .agg(
-            F.max(F.when(F.col("win"), F.col("len"))).alias("max_win_streak"),
-            F.max(F.when(~F.col("win"), F.col("len"))).alias("max_loss_streak"),
-        )
-    )
-
-    # --- drawdown trough + period (W7: argmin via min_by) ---
-    dd = eq.agg(
-        F.min("drawdown").alias("max_drawdown"),
-        F.min_by("date", "drawdown").alias("max_drawdown_end"),
-        F.min_by("peak", F.struct("drawdown", "date")).alias("dd_peak_value"),
-    )
-    # drawdown start = first date equity hit the peak that preceded the trough
-    dd_start = (
-        eq.join(F.broadcast(dd), eq.equity == dd.dd_peak_value, "inner")
-        .agg(F.min("date").alias("max_drawdown_start"))
-    )
-
-    # --- equity/risk metrics (population std per reference np.std) ---
-    e_agg = eq.agg(
-        F.min("date").alias("start_date"),
-        F.max("date").alias("end_date"),
-        F.count(F.lit(1)).alias("trading_days"),
-        F.first("equity").alias("_ignore_first"),
-        F.max_by("equity", "date").alias("final_equity"),
-        F.avg("daily_return").alias("avg_daily_return"),
-        F.stddev_pop("daily_return").alias("daily_volatility"),
-        F.stddev_pop(F.when(F.col("daily_return") < 0, F.col("daily_return"))).alias(
-            "downside_std"
-        ),
-    ).drop("_ignore_first")
-
-    row = (
-        t_agg.crossJoin(streaked)
-        .crossJoin(dd.select("max_drawdown", "max_drawdown_end"))
-        .crossJoin(dd_start)
-        .crossJoin(e_agg)
-    )
-    annual_return = F.pow(1 + F.col("avg_daily_return"), 252) - 1
-    annual_vol = F.col("daily_volatility") * F.sqrt(F.lit(252.0))
-    downside_vol = F.col("downside_std") * F.sqrt(F.lit(252.0))
-    return row.select(
-        "start_date",
-        "end_date",
-        "trading_days",
-        F.lit(INITIAL_CAPITAL).alias("initial_capital"),
-        "final_equity",
-        (F.col("final_equity") / INITIAL_CAPITAL - 1).alias("total_return"),
-        ((F.col("final_equity") / INITIAL_CAPITAL - 1) * 100).alias("total_return_pct"),
-        "num_trades",
-        "num_wins",
-        "num_losses",
-        (F.col("num_wins") / F.greatest(F.col("num_trades"), F.lit(1)) * 100).alias("win_rate"),
-        F.coalesce("avg_win", F.lit(0.0)).alias("avg_win"),
-        F.coalesce("avg_loss", F.lit(0.0)).alias("avg_loss"),
-        F.coalesce("avg_win_pct", F.lit(0.0)).alias("avg_win_pct"),
-        F.coalesce("avg_loss_pct", F.lit(0.0)).alias("avg_loss_pct"),
-        "largest_win",
-        "largest_loss",
-        "largest_win_pct",
-        "largest_loss_pct",
-        F.when(F.col("gross_loss") != 0, F.abs(F.col("gross_profit") / F.col("gross_loss")))
-        .otherwise(0.0)
-        .alias("profit_factor"),
-        "expectancy",
-        "avg_days_held",
-        F.coalesce("max_win_streak", F.lit(0)).alias("max_win_streak"),
-        F.coalesce("max_loss_streak", F.lit(0)).alias("max_loss_streak"),
-        "max_drawdown",
-        (F.col("max_drawdown") * 100).alias("max_drawdown_pct"),
-        "max_drawdown_start",
-        "max_drawdown_end",
-        F.datediff("max_drawdown_end", "max_drawdown_start").alias(
-            "max_drawdown_duration_days"
-        ),
-        "avg_daily_return",
-        "daily_volatility",
-        annual_return.alias("annual_return"),
-        annual_vol.alias("annual_volatility"),
-        F.when(annual_vol > 0, annual_return / annual_vol).otherwise(0.0).alias("sharpe_ratio"),
-        F.when(downside_vol > 0, annual_return / downside_vol)
-        .otherwise(0.0)
-        .alias("sortino_ratio"),
-        F.when(F.col("max_drawdown") != 0, annual_return / F.abs(F.col("max_drawdown")))
-        .otherwise(0.0)
-        .alias("calmar_ratio"),
-    )
+    peak = np.maximum.accumulate(equity)
+    drawdown = equity / peak - 1
+    trough = int(drawdown.argmin())
+    start = int(np.flatnonzero(equity == peak[trough])[0])
+    depth = float(drawdown[trough])
+    return {
+        "max_drawdown": depth,
+        "max_drawdown_pct": depth * 100,
+        "max_drawdown_start": dates[start],
+        "max_drawdown_end": dates[trough],
+        "max_drawdown_duration_days": (dates[trough].normalize() - dates[start].normalize()).days,
+    }

@@ -60,7 +60,9 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("user_id").orderBy("day")
     return feats.withColumn(
         "fwd_ret_1",
-        F.round(F.lead("close_value").over(w) / F.col("close_value") - 1, 6),
+        # try_divide: a zero-valued purchase day has no forward return
+        # (NULL, as DuckDB's division gives) instead of failing under ANSI.
+        F.round(F.try_divide(F.lead("close_value").over(w), F.col("close_value")) - 1, 6),
     )
 
 
@@ -470,7 +472,7 @@ def _sweep_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     for ld in _SWEEP_LEADS:
         per_day = per_day.withColumn(
             f"fwd_{ld}",
-            F.round(F.lead("close_value", ld).over(w) / F.col("close_value") - 1, 6),
+            F.round(F.try_divide(F.lead("close_value", ld).over(w), F.col("close_value")) - 1, 6),
         )
     return per_day
 

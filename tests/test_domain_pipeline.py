@@ -4,12 +4,16 @@ pandas re-implementation of the reference's documented formulas."""
 
 from __future__ import annotations
 
+import datetime
 import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from streamprocessing_kafka_finlight_news_dashboard_spark import pipeline as P
 from streamprocessing_kafka_finlight_news_dashboard_spark.pipeline import fixtures as FX
@@ -320,6 +324,129 @@ def test_backtest_metrics_golden_replica(spark, domain, hold_hours):
             assert math.isclose(float(have), float(want), rel_tol=1e-9, abs_tol=1e-12), (
                 f"{name}: engine={have} replica={want}"
             )
+
+
+#: ``backtest_metrics``' public schema: names, order, Spark types and
+#: nullability. Readers of the report select its columns by name and
+#: type, so any change here is an API change.
+_REPORT_DDL = (
+    "start_date timestamp, end_date timestamp, trading_days bigint NOT NULL, "
+    "initial_capital double NOT NULL, final_equity double, total_return double, "
+    "total_return_pct double, num_trades bigint NOT NULL, num_wins bigint, "
+    "num_losses bigint, win_rate double, avg_win double NOT NULL, "
+    "avg_loss double NOT NULL, avg_win_pct double NOT NULL, avg_loss_pct double NOT NULL, "
+    "largest_win double, largest_loss double, largest_win_pct double, "
+    "largest_loss_pct double, profit_factor double, expectancy double, "
+    "avg_days_held double, max_win_streak bigint NOT NULL, max_loss_streak bigint NOT NULL, "
+    "max_drawdown double, max_drawdown_pct double, max_drawdown_start timestamp, "
+    "max_drawdown_end timestamp, max_drawdown_duration_days int, avg_daily_return double, "
+    "daily_volatility double, annual_return double, annual_volatility double, "
+    "sharpe_ratio double, sortino_ratio double, calmar_ratio double"
+)
+
+
+@pytest.fixture(scope="module")
+def persisted_backtest(spark, domain):
+    """The fixture backtest's trade log and equity curve, persisted and
+    counted so that later actions only read them."""
+    prices, scored = domain
+    best = P.best_configs(P.lag_sweep(prices, scored, min_news=3, min_obs=10))
+    sig = P.generate_signals(
+        prices, scored, best, sentiment_threshold=0.2, min_news_count=3, min_correlation=0.05
+    )
+    trades, equity = P.run_backtest(sig, prices, hold_period_hours=240)
+    for df in (trades, equity):
+        df.persist()
+        df.count()
+    yield trades, equity
+    trades.unpersist()
+    equity.unpersist()
+
+
+def test_backtest_metrics_schema_pinned(spark, persisted_backtest):
+    assert P.backtest_metrics(*persisted_backtest).schema == StructType.fromDDL(_REPORT_DDL)
+
+
+def test_backtest_metrics_job_budget(spark, persisted_backtest):
+    """Over persisted inputs the report costs one collect per input and
+    nothing for the one-row result: at most 2 Spark jobs (a relational
+    plan pays one job per aggregate branch, 13 here)."""
+    sc = spark.sparkContext
+    group = "backtest-metrics-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        P.backtest_metrics(*persisted_backtest).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_backtest_without_trades(spark, domain):
+    """Signals without a BUY row: an empty typed trade log, a flat
+    equity curve, and a report row with zero counts and null extremes."""
+    prices, _ = domain
+    sig = prices.select(
+        "ticker",
+        "date",
+        F.lit("HOLD").alias("signal"),
+        F.lit(0.0).alias("sentiment"),
+        F.lit(5).cast("long").alias("news_count"),
+        F.lit(24).alias("lookback_hours"),
+        F.lit(1).alias("lead_days"),
+    )
+    trades, equity = P.run_backtest(sig, prices)
+    assert trades.count() == 0
+    e = equity.toPandas()
+    cap = P.backtest.INITIAL_CAPITAL
+    assert len(e) == prices.select("date").distinct().count()
+    assert (e["equity"] == cap).all() and (e["num_positions"] == 0).all()
+
+    m = P.backtest_metrics(trades, equity).first()
+    assert (m.num_trades, m.num_wins, m.num_losses) == (0, 0, 0)
+    assert m.win_rate == m.profit_factor == m.avg_win == m.avg_loss == 0.0
+    assert m.max_win_streak == m.max_loss_streak == 0
+    assert m.final_equity == cap and m.total_return == 0.0
+    assert m.trading_days == len(e)
+    for name in (
+        "largest_win", "largest_loss", "largest_win_pct", "largest_loss_pct",
+        "expectancy", "avg_days_held",
+    ):
+        assert m[name] is None, name
+    assert m.max_drawdown == 0.0 and m.max_drawdown_duration_days == 0
+    assert m.sharpe_ratio == m.sortino_ratio == m.calmar_ratio == 0.0
+
+
+def test_forward_returns_skip_zero_valued_purchase_days(spark, tmp_path):
+    """A purchase day whose values average 0 has no forward return
+    (NULL, as the DuckDB oracle's division gives); under ANSI a bare
+    division by it fails the whole query."""
+    from streamprocessing_kafka_finlight_news_dashboard_spark.plans import domain as D
+
+    day = [datetime.datetime(2024, 1, d) for d in (2, 3, 4, 5)]
+    purchases = [(day[0], 10.0), (day[1], 0.0), (day[2], 12.0), (day[3], 15.0)]
+    clicks = [(d - datetime.timedelta(hours=2), 40.0) for d in day]
+    rows = [(ts, "purchase", v) for ts, v in purchases] + [(ts, "click", v) for ts, v in clicks]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(rows)), pa.int64()),
+                "ts": pa.array([r[0] for r in rows], pa.timestamp("us")),
+                "user_id": pa.array([1] * len(rows), pa.int64()),
+                "event_type": [r[1] for r in rows],
+                "value": [r[2] for r in rows],
+                "props": ["{}"] * len(rows),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+    feats = D._features(spark, str(tmp_path)).orderBy("day").collect()
+    assert [r.fwd_ret_1 for r in feats] == [-1.0, None, 0.25, None]
+    per_day = D._sweep_per_day(spark, str(tmp_path)).orderBy("day").collect()
+    assert [(r.fwd_1, r.fwd_2) for r in per_day] == [
+        (-1.0, 0.2), (None, None), (0.25, None), (None, None)
+    ]
 
 
 #: The reference's PUBLISHED conservative-variant backtest summary
